@@ -4,9 +4,11 @@ The reference wraps chat-completion HTTP calls in a thread pool with a
 global min-delay lock, exponential backoff (max 5 tries / 300 s) and
 Retry-After handling (enhance_fields_of_study.py:49-96,
 enhance_summary.py:55-111). In the Spark engine the same discipline
-lives *inside each partition*: executor-local token-bucket + client
-retries (never Spark task retries — a task retry would re-spend paid
-calls; see sources/checkpoint.py for the durability half).
+lives *inside each partition*: an executor-local token bucket shared
+by a pool of call threads, and per-row retries at one site
+(``enrich_with_llm``), never Spark task retries — a task retry would
+re-spend every paid call of the partition; see sources/checkpoint.py
+for the durability half.
 
 `DeterministicFakeLLM` makes correctness runs reproducible: responses
 are seeded by the prompt's md5, and it deliberately emits the
@@ -18,6 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
 from dataclasses import dataclass, field
 from typing import Protocol
@@ -31,29 +34,39 @@ class LLMClient(Protocol):
 class RateLimiter:
     """Token bucket: at most `rate` calls per second, burst `burst`.
 
-    Executor-local (one per mapInPandas partition iterator); total
-    cluster concurrency = partitions × rate, the Spark analog of the
-    reference's MAX_WORKERS × BASE_DELAY throttle.
+    Executor-local (one per mapInPandas partition iterator) and
+    thread-safe: the partition's call pool has `burst` threads that all
+    acquire from this bucket. The wait happens under the lock, so the
+    spacing holds across threads and the sustained rate stays `rate`.
+    Cluster-wide that is partitions × burst calls in flight, each
+    partition at most `rate`/s — the Spark analog of the reference's
+    MAX_WORKERS × BASE_DELAY throttle. Because the pool shares one
+    client, `client.generate` must be thread-safe; `DeterministicFakeLLM`
+    and `HttpChatClient` are, being stateless per call.
     """
 
     rate: float = 10.0
     burst: int = 5
     _tokens: float = field(default=0.0, init=False)
     _last: float = field(default=0.0, init=False)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def acquire(self) -> None:
-        now = time.monotonic()
-        if self._last == 0.0:
-            self._tokens = float(self.burst)
-        else:
-            self._tokens = min(self.burst, self._tokens + (now - self._last) * self.rate)
-        self._last = now
-        if self._tokens < 1.0:
-            wait = (1.0 - self._tokens) / self.rate
-            time.sleep(wait)
-            self._tokens = 1.0
-            self._last = time.monotonic()
-        self._tokens -= 1.0
+        with self._lock:
+            now = time.monotonic()
+            if self._last == 0.0:
+                self._tokens = float(self.burst)
+            else:
+                self._tokens = min(self.burst, self._tokens + (now - self._last) * self.rate)
+            self._last = now
+            if self._tokens < 1.0:
+                wait = (1.0 - self._tokens) / self.rate
+                time.sleep(wait)
+                self._tokens = 1.0
+                self._last = time.monotonic()
+            self._tokens -= 1.0
 
 
 @dataclass
@@ -106,8 +119,10 @@ class HttpChatClient:
     (the reference's DeepSeek calls, enhance_fields_of_study.py:68-117).
     Stdlib-only (urllib) so it needs no extra dependency; constructed
     per partition via the client_factory so connections are never
-    pickled from the driver. Untested here by design — no network in
-    the test environment; the protocol surface matches
+    pickled from the driver. One request per call: a failure raises,
+    and ``enrich_with_llm`` retries the row with
+    :func:`retry_with_backoff`. Stateless per call, so the partition's
+    call pool may share one instance. The protocol surface matches
     DeterministicFakeLLM exactly, so swapping clients is one argument.
     """
 
@@ -115,34 +130,29 @@ class HttpChatClient:
     api_key: str
     model: str = "deepseek-chat"
     temperature: float = 0.2
-    max_tries: int = 5
 
-    def generate(self, prompt: str, max_tokens: int = 300) -> str:  # pragma: no cover
-        import json as _json
+    def generate(self, prompt: str, max_tokens: int = 300) -> str:
         import urllib.request
 
-        def call() -> str:
-            body = _json.dumps(
-                {
-                    "model": self.model,
-                    "messages": [{"role": "user", "content": prompt}],
-                    "temperature": self.temperature,
-                    "max_tokens": max_tokens,
-                }
-            ).encode("utf-8")
-            req = urllib.request.Request(
-                f"{self.base_url.rstrip('/')}/chat/completions",
-                data=body,
-                headers={
-                    "Content-Type": "application/json",
-                    "Authorization": f"Bearer {self.api_key}",
-                },
-            )
-            with urllib.request.urlopen(req, timeout=60) as resp:
-                payload = _json.loads(resp.read().decode("utf-8"))
-            return payload["choices"][0]["message"]["content"]
-
-        return retry_with_backoff(call, max_tries=self.max_tries)
+        body = json.dumps(
+            {
+                "model": self.model,
+                "messages": [{"role": "user", "content": prompt}],
+                "temperature": self.temperature,
+                "max_tokens": max_tokens,
+            }
+        ).encode("utf-8")
+        req = urllib.request.Request(
+            f"{self.base_url.rstrip('/')}/chat/completions",
+            data=body,
+            headers={
+                "Content-Type": "application/json",
+                "Authorization": f"Bearer {self.api_key}",
+            },
+        )
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            payload = json.loads(resp.read().decode("utf-8"))
+        return payload["choices"][0]["message"]["content"]
 
 
 @dataclass

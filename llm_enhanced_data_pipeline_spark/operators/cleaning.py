@@ -143,7 +143,7 @@ def align_schema(
         base = F.col(f_name).cast("string") if f_name in existing else F.lit(None).cast("string")
         cols.append(F.coalesce(base, F.lit("")).alias(f_name))
     for f_name in int_fields or []:
-        base = F.col(f_name).cast("bigint") if f_name in existing else F.lit(None).cast("bigint")
+        base = safe_int(F.col(f_name)) if f_name in existing else F.lit(None).cast("bigint")
         cols.append(F.coalesce(base, F.lit(0)).alias(f_name))
     for f_name in array_fields:
         base = (
@@ -156,10 +156,12 @@ def align_schema(
 
 
 # P2 — threshold filter (citation_filter.py:23-26): missing counts are
-# treated as 0 (reference uses .get(field, 0)).
+# treated as 0 (reference uses .get(field, 0)); string counts such as
+# "12 citations" go through safe_float, never an ANSI cast that fails
+# the job.
 
 def threshold_filter(df: DataFrame, field: str, min_value: float = 0) -> DataFrame:
-    return df.filter(F.coalesce(F.col(field), F.lit(0)) >= F.lit(min_value))
+    return df.filter(F.coalesce(safe_float(F.col(field)), F.lit(0.0)) >= F.lit(min_value))
 
 
 def tokens(col: Column) -> Column:

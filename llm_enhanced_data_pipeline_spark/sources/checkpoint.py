@@ -41,8 +41,14 @@ class ParquetCheckpoint:
             return None
         return self.spark.read.parquet(self.path)
 
-    def append(self, df: DataFrame) -> None:
+    def append(self, df: DataFrame) -> DataFrame:
+        """Write ``df``, then return the whole checkpoint read back from
+        its durable files: checkpointed ∪ new (enhance_keywords.py:451),
+        each row once, so consumers never re-run ``df``'s paid lineage.
+        The read takes ``df``'s schema, which spares the Spark job that
+        parquet schema inference would launch on every append."""
         df.write.mode("append").parquet(self.path)
+        return self.spark.read.schema(df.schema).parquet(self.path)
 
     def remaining(self, todo: DataFrame) -> DataFrame:
         """J3 — rows not yet processed."""
@@ -50,10 +56,3 @@ class ParquetCheckpoint:
         if done is None:
             return todo
         return todo.join(done.select(self.key).distinct(), self.key, "left_anti")
-
-    def merged(self, new_rows: DataFrame) -> DataFrame:
-        """checkpointed ∪ new (enhance_keywords.py:451)."""
-        done = self.load()
-        if done is None:
-            return new_rows
-        return done.unionByName(new_rows, allowMissingColumns=True)

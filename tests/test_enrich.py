@@ -78,6 +78,122 @@ def test_rate_limiter_throttles():
     assert elapsed >= 0.08  # 5 waits at ~1/50s
 
 
+def test_rate_limiter_holds_rate_across_threads():
+    # 8 threads share one bucket, as the partition's call pool does: the
+    # first `burst` calls are free, the other 155 come at `rate`/s. A
+    # bucket that lost updates between threads would let them through
+    # several times faster.
+    import sys
+    import threading
+    import time
+
+    rl = RateLimiter(rate=200.0, burst=5)
+    threads = [
+        threading.Thread(target=lambda: [rl.acquire() for _ in range(20)])
+        for _ in range(8)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t0 = time.monotonic()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        elapsed = time.monotonic() - t0
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert elapsed >= (160 - 5) / 200.0
+
+
+def _serial_enrichment(rows, prompts, client):
+    """The one-call-at-a-time loop, as the reference for the pool."""
+    from llm_enhanced_data_pipeline_spark.functions.parsing import parse_llm_json
+
+    pdf = pd.DataFrame([r.asDict() for r in rows])
+    out = []
+    for doc_id, prompt in zip(pdf["doc_id"], prompts(pdf)):
+        parsed = parse_llm_json(client.generate(prompt))
+        out.append((doc_id, prompt, None if parsed is None else json.dumps(parsed, sort_keys=True)))
+    return out
+
+
+def test_enrich_with_llm_overlaps_calls_up_to_burst(spark, tmp_path):
+    import threading
+    import time
+
+    peak_file = str(tmp_path / "peak")
+
+    class SlowLLM:
+        """20 ms per call; records the most calls it saw in flight."""
+
+        def __init__(self):
+            self.inner = DeterministicFakeLLM(task="scoring")
+            self.lock = threading.Lock()
+            self.in_flight = self.peak = 0
+
+        def generate(self, prompt, max_tokens=300):
+            with self.lock:
+                self.in_flight += 1
+                if self.in_flight > self.peak:
+                    self.peak = self.in_flight
+                    with open(peak_file, "w") as f:
+                        f.write(str(self.peak))
+            time.sleep(0.02)
+            with self.lock:
+                self.in_flight -= 1
+            return self.inner.generate(prompt, max_tokens)
+
+    df = spark.createDataFrame([Row(doc_id=i, title=f"paper {i}") for i in range(40)]).coalesce(1)
+    out = enrich_with_llm(df, "doc_id", _prompts, SlowLLM, rate_per_sec=10_000.0).collect()
+
+    with open(peak_file) as f:
+        peak = int(f.read())
+    assert 2 <= peak <= RateLimiter().burst
+    expected = _serial_enrichment(df.collect(), _prompts, DeterministicFakeLLM(task="scoring"))
+    assert [(r.doc_id, r.prompt, r.llm_json) for r in out] == expected
+
+
+def test_enrich_with_llm_retries_failed_calls_per_row(spark, tmp_path):
+    # The first attempt of every 3rd prompt raises. Each row is retried
+    # inside the task, so the task never fails and Spark never re-runs a
+    # partition: the paid-call ledger holds exactly one call per row plus
+    # one per injected failure. The ledger is a per-process file because
+    # the calls happen in Python worker processes.
+    import os
+    import threading
+
+    ledger = tmp_path / "ledger"
+    ledger.mkdir()
+
+    class FlakyLLM:
+        def __init__(self):
+            self.inner = DeterministicFakeLLM(task="scoring")
+            self.lock = threading.Lock()
+            self.failed: set[str] = set()
+            self.path = ledger / f"{os.getpid()}-{id(self)}"
+
+        def generate(self, prompt, max_tokens=300):
+            with open(self.path, "ab") as f:
+                f.write(b"1")
+            with self.lock:
+                fail = int(prompt.rsplit(" ", 1)[1]) % 3 == 0 and prompt not in self.failed
+                self.failed.add(prompt)
+            if fail:
+                raise ConnectionError("transient")
+            return self.inner.generate(prompt, max_tokens)
+
+    n = 30
+    df = spark.createDataFrame([Row(doc_id=i, title=f"paper {i}") for i in range(n)]).repartition(3)
+    out = enrich_with_llm(df, "doc_id", _prompts, FlakyLLM, rate_per_sec=10_000.0).collect()
+
+    assert sorted(r.doc_id for r in out) == list(range(n))
+    assert all(json.loads(r.llm_json)["novelty"] in range(11) for r in out)
+    calls = sum(p.stat().st_size for p in ledger.iterdir())
+    assert calls == n + n // 3
+
+
 def test_retry_with_backoff_retries_then_succeeds():
     calls = {"n": 0}
 

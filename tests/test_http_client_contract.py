@@ -1,6 +1,7 @@
 """Contract tests for the production HTTP chat client against a local
-stub server — proves the request shape, auth header, retry-on-5xx, and
-backoff behavior without any network access."""
+stub server — proves the request shape, auth header, one request per
+call, and retry-on-5xx at the enrichment's single retry site
+(retry_with_backoff) without any network access."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 
 import pytest
 
-from llm_enhanced_data_pipeline_spark.enrich.client import HttpChatClient
+from llm_enhanced_data_pipeline_spark.enrich.client import HttpChatClient, retry_with_backoff
 
 
 class _StubHandler(BaseHTTPRequestHandler):
@@ -75,15 +76,18 @@ def test_happy_path_request_contract(stub_server):
 
 def test_retries_on_server_error_then_succeeds(stub_server):
     _StubHandler.fail_first_n = 2
-    client = HttpChatClient(base_url=stub_server, api_key="k", max_tries=4)
-    out = client.generate("retry me")
+    client = HttpChatClient(base_url=stub_server, api_key="k")
+    with pytest.raises(Exception):
+        client.generate("retry me")
+    assert len(_StubHandler.requests_seen) == 1  # the client itself never retries
+    out = retry_with_backoff(lambda: client.generate("retry me"), max_tries=4, base_delay=0.001)
     assert out == "echo:retry me"
     assert len(_StubHandler.requests_seen) == 3  # two 503s + one success
 
 
 def test_exhausted_retries_raise(stub_server):
     _StubHandler.fail_first_n = 99
-    client = HttpChatClient(base_url=stub_server, api_key="k", max_tries=2)
+    client = HttpChatClient(base_url=stub_server, api_key="k")
     with pytest.raises(Exception):
-        client.generate("never works")
+        retry_with_backoff(lambda: client.generate("never works"), max_tries=2, base_delay=0.001)
     assert len(_StubHandler.requests_seen) == 2

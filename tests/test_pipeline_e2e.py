@@ -59,6 +59,29 @@ def _fixture_sources(spark):
     return spark.createDataFrame(src_a), spark.createDataFrame(src_b)
 
 
+def test_align_stage_rescues_string_counts(spark):
+    # FIXTURES.md §2: OpenAlex sometimes ships counts and years as
+    # strings. Under ANSI a plain cast of "12 citations" fails the whole
+    # job; the citation filter and the canonical align must rescue the
+    # number instead (safe_int / safe_float), and unparseable → 0.
+    counts = ["12 citations", "3", None, "n/a"]
+    years = ["2025 (preprint)", "2024", "2023", None]
+    raw = spark.createDataFrame(
+        [_paper(i, citation_count=c, publish_year=y) for i, (c, y) in enumerate(zip(counts, years), 1)]
+    )
+    aligned = P.align_stage(raw)
+    assert dict(aligned.dtypes)["citation_count"] == "bigint"
+    got = sorted((r.paper_id, r.citation_count, r.publish_year) for r in aligned.collect())
+    assert got == [
+        ("2511.00001", 12, 2025),
+        ("2511.00002", 3, 2024),
+        ("2511.00003", 0, 2023),
+        ("2511.00004", 0, 0),
+    ]
+    kept = P.align_stage(raw, min_citations=5).select("paper_id", "citation_count").collect()
+    assert [(r.paper_id, r.citation_count) for r in kept] == [("2511.00001", 12)]
+
+
 def test_pipeline_end_to_end(spark, tmp_path):
     a, b = _fixture_sources(spark)
     merged = P.merge_sources([a, b])

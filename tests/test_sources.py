@@ -56,10 +56,11 @@ def test_checkpoint_resume_skips_processed(spark, tmp_path):
     assert set(r.paper_id for r in remaining.collect()) == {"p%d" % i for i in range(4, 10)}
 
     second = remaining.withColumn("result", F.col("payload") * 2)
-    ckpt.append(second)
+    full = ckpt.append(second)
     assert ckpt.remaining(todo).count() == 0
-    merged = ckpt.merged(spark.createDataFrame([], first_batch.schema))
-    assert merged.count() == 10
+    assert ckpt.load().count() == 10
+    # append returns checkpointed ∪ new, each paper once
+    assert sorted(r.paper_id for r in full.collect()) == sorted("p%d" % i for i in range(10))
 
 
 # --- load_table schema contract -------------------------------------------
