@@ -69,37 +69,6 @@ class RateLimiter:
             self._tokens -= 1.0
 
 
-@dataclass
-class AdaptiveRateLimiter:
-    """Success-window adaptive limiter (enhance_summary.py:55-111):
-    tracks the recent success ratio and scales the inter-call delay —
-    shrink toward ``min_delay`` while healthy, multiply up after
-    failures. Executor-local, like :class:`RateLimiter`."""
-
-    min_delay: float = 0.05
-    max_delay: float = 5.0
-    window: int = 20
-    _delay: float = field(default=0.2, init=False)
-    _results: list = field(default_factory=list, init=False)
-
-    def acquire(self) -> None:
-        time.sleep(self._delay)
-
-    def record(self, success: bool) -> None:
-        self._results.append(success)
-        if len(self._results) > self.window:
-            self._results.pop(0)
-        ratio = sum(self._results) / len(self._results)
-        if not success:
-            self._delay = min(self._delay * 2.0, self.max_delay)
-        elif ratio >= 0.9:
-            self._delay = max(self._delay * 0.8, self.min_delay)
-
-    @property
-    def current_delay(self) -> float:
-        return self._delay
-
-
 def retry_with_backoff(fn, max_tries: int = 5, base_delay: float = 0.1, max_delay: float = 300.0):
     """backoff.expo-equivalent (enhance_fields_of_study.py:61-66)."""
     delay = base_delay

@@ -70,38 +70,11 @@ def _mix_consts(i: int) -> tuple[int, int]:
     return 2 * i + 1, 97 + 31 * i
 
 
-def minhash_value(tokens: Column, seed: int) -> Column:
-    """min over tokens of mix_seed(stable_hash32(token)); empty-safe.
-
-    Empty docs get a sentinel above every real hash so they never
-    collide with content.
-    """
-    a, b = _mix_consts(seed)
-    hashed = F.transform(
-        tokens, lambda t: (stable_hash32(t) * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-    )
-    return F.coalesce(F.array_min(hashed), F.lit(EMPTY_MINHASH + seed)).cast("bigint")
-
-
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int) -> Column:
-    """Signature array from a pre-materialized stable_hash32 array."""
-
-    def mixer(a: int, b: int):
-        return lambda h: (h * a + b) % MINHASH_PRIME
-
-    comps = []
-    for i in range(num_hashes):
-        a, b = _mix_consts(i)
-        mixed = F.transform(hashes, mixer(a, b))
-        comps.append(
-            F.coalesce(F.array_min(mixed), F.lit(EMPTY_MINHASH + i)).cast("bigint")
-        )
-    return F.array(*comps)
-
-
 def minhash_signature_sql(hashes_expr: str, num_hashes: int) -> str:
-    """DuckDB twin of :func:`minhash_signature_from_hashes` where
-    ``hashes_expr`` is a list of stable_hash32 values."""
+    """DuckDB MinHash signature with the same affine mixes as the
+    ``_s0.._sN`` minima of ``operators.dedup.minhash_grouped``, where
+    ``hashes_expr`` is a list of stable_hash32 values (an empty list
+    gets the ``EMPTY_MINHASH + i`` sentinels)."""
     comps = []
     for i in range(num_hashes):
         a, b = _mix_consts(i)
@@ -116,31 +89,6 @@ def token_hashes32_sql(tokens_expr: str) -> str:
     """DuckDB: list of stable_hash32 values for a token list."""
     tok_hash = "CAST(('0x' || substring(md5('0:' || _t), 1, 8)) AS UBIGINT)::BIGINT"
     return f"list_transform({tokens_expr}, _t -> {tok_hash})"
-
-
-def simhash60(tokens: Column) -> Column:
-    """60-bit SimHash over a token array.
-
-    Classic SimHash: for each bit position, sum +1/-1 votes from every
-    token's hash bit; the output bit is 1 where the vote is positive.
-    Pure SQL expressions (no UDF) so it stays in whole-stage codegen.
-    """
-    hashes = F.transform(tokens, lambda t: stable_hash60(t))
-
-    def bit_vote(j: int) -> Column:
-        # votes in [-len, +len], far from overflow
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("bigint"),
-            lambda acc, h: acc + (F.shiftright(h, j) % 2) * 2 - 1,
-        )
-
-    out = F.lit(0).cast("bigint")
-    for j in range(60):
-        out = out + F.when(bit_vote(j) > 0, F.lit(2**j).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return out
 
 
 def token_hashes60_sql(tokens_expr: str) -> str:

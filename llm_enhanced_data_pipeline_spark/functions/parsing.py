@@ -7,7 +7,8 @@ extract a JSON object/array → per-key regex → line-based extraction.
 
 The fast path (`parsed_json_col`) is a pure ``from_json`` expression;
 the full cascade is inherently procedural, so it is one well-tested
-Python function exposed as an Arrow-batched pandas UDF.
+Python function, called per row inside the enrichment partitions
+(enrich/enhance.py).
 """
 
 from __future__ import annotations
@@ -16,10 +17,8 @@ import json
 import re
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 _FENCE = re.compile(r"^\s*```(?:json)?\s*|\s*```\s*$", re.MULTILINE)
 _OBJ = re.compile(r"\{.*\}", re.DOTALL)
@@ -71,15 +70,3 @@ def parsed_json_col(col: Column, schema: str) -> Column:
     """Fast path: strip fences with regexp, then from_json (JVM-side)."""
     cleaned = F.regexp_replace(col, r"^\s*```(?:json)?\s*|\s*```\s*$", "")
     return F.from_json(F.trim(cleaned), schema)
-
-
-@F.pandas_udf(StringType())
-def parse_llm_json_udf(responses: pd.Series) -> pd.Series:  # pragma: no cover
-    """Cascade as an Arrow-batched UDF; returns canonical JSON text
-    (sorted keys) or null. Downstream applies from_json with the
-    expected schema."""
-    def run(text: str | None) -> str | None:
-        parsed = parse_llm_json(text)
-        return None if parsed is None else json.dumps(parsed, sort_keys=True)
-
-    return responses.map(run)

@@ -106,26 +106,12 @@ def safe_int(col: Column) -> Column:
     return F.coalesce(direct, rescued)
 
 
-def safe_int_sql(expr: str) -> str:
-    return (
-        f"coalesce(try_cast(trim(CAST({expr} AS VARCHAR)) AS BIGINT), "
-        f"try_cast(nullif(regexp_extract(CAST({expr} AS VARCHAR), '[-+]?\\d+', 0), '') AS BIGINT))"
-    )
-
-
 def safe_float(col: Column) -> Column:
     direct = F.trim(col.cast("string")).try_cast("double")
     rescued = F.nullif(
         F.regexp_extract(col.cast("string"), r"[-+]?\d*\.?\d+", 0), F.lit("")
     ).try_cast("double")
     return F.coalesce(direct, rescued)
-
-
-def safe_float_sql(expr: str) -> str:
-    return (
-        f"coalesce(try_cast(trim(CAST({expr} AS VARCHAR)) AS DOUBLE), "
-        f"try_cast(nullif(regexp_extract(CAST({expr} AS VARCHAR), '[-+]?\\d*\\.?\\d+', 0), '') AS DOUBLE))"
-    )
 
 
 # P1 — canonical schema alignment: fixed column list, missing/null

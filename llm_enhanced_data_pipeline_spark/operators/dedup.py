@@ -266,14 +266,6 @@ def word_shingles(toks: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
-def word_shingles_sql(tokens_expr: str, n: int) -> str:
-    """DuckDB twin of :func:`word_shingles` (1-based list_slice)."""
-    return (
-        f"list_transform(range(1, greatest(len({tokens_expr}) - {n - 1}, 0) + 1), "
-        f"_i -> array_to_string(list_slice({tokens_expr}, _i, _i + {n - 1}), ' '))"
-    )
-
-
 # D4 — similarity dedup, exact pairwise form ("remove if any earlier
 # similar row exists"). Quadratic — correct for modest partitions and
 # the oracle ground truth for the LSH path.
@@ -338,22 +330,6 @@ def dedup_similarity_exact(
 # MinHash + LSH banding — the 100 TB path for D4. Candidate pairs come
 # from equality joins on band keys (shuffle, no cross product); each
 # candidate is verified with the exact Jaccard.
-
-def minhash_signature(toks: Column, num_hashes: int) -> Column:
-    """Tokens are md5-hashed once; components use affine mixes."""
-    hashes = F.transform(toks, lambda t: hashing.stable_hash32(t))
-    return hashing.minhash_signature_from_hashes(hashes, num_hashes)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """band key = band index + md5 of the band's signature slice."""
-    keys = []
-    for b in range(bands):
-        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        digest = hashing.md5_hex(F.concat_ws(",", F.transform(band_slice, lambda v: v.cast("string"))))
-        keys.append(F.concat(F.lit(f"{b}:"), digest))
-    return F.array(*keys)
-
 
 def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
     """LSH band-key columns over a :func:`minhash_grouped` frame's

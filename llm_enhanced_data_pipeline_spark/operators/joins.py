@@ -6,10 +6,12 @@ Reference parity:
    build_simple_dataset.py:149-250 — dict-probe hash joins)
 - J3 checkpoint anti-join (enhance_fields_of_study.py:347-356)
 
-Scale: enrichment sides are slim (paper_id + one payload column), so
-they broadcast when under the threshold; otherwise AQE picks a shuffled
-hash join on the shared key — one shuffle, reused across the chained
-joins because every join keys on the same column.
+Scale: enrichment sides are slim (paper_id + one payload column). No
+join hint is set: the planner (and AQE, at runtime sizes) broadcasts a
+side under the session's ``autoBroadcastJoinThreshold`` (64 MB,
+session.py); otherwise it plans a shuffled join on the shared key —
+one shuffle, reused across the chained joins because every join keys on
+the same column.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ def enrichment_join(
     base: DataFrame,
     sides: dict[str, tuple[DataFrame, dict[str, Column]]],
     key: str,
-    broadcast_sides: bool = True,
 ) -> DataFrame:
     """LEFT JOIN each enrichment side on ``key``; fill missing payloads.
 
@@ -32,8 +33,7 @@ def enrichment_join(
     """
     out = base
     for _label, (side, defaults) in sides.items():
-        side_df = F.broadcast(side) if broadcast_sides else side
-        out = out.join(side_df, key, "left")
+        out = out.join(side, key, "left")
         for col_name, default in defaults.items():
             out = out.withColumn(col_name, F.coalesce(F.col(col_name), default))
     return out

@@ -88,13 +88,6 @@ RULER_TIERS: tuple[tuple[float, str], ...] = (
 )
 
 
-def weighted_score(components: dict[str, Column], weights: dict[str, float]) -> Column:
-    total = F.lit(0.0)
-    for name, w in weights.items():
-        total = total + components[name] * F.lit(w)
-    return F.round(total, 4)
-
-
 def tier(score: Column) -> Column:
     out = F.lit("Low")
     for cut, name in reversed(RULER_TIERS):

@@ -58,13 +58,6 @@ def cosine_similarity_sql(a: str, b: str) -> str:
     return f"(CASE WHEN {denom} > 0 THEN {dot_sql(a, b)} / {denom} ELSE 0.0 END)"
 
 
-def normalize_vec(a: Column) -> Column:
-    n = l2_norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x.cast("double") / n)).otherwise(
-        F.transform(a, lambda x: x.cast("double"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Brute-force cosine top-k: one query vector against the corpus
 # (VectorStore.search). The reference's threshold quirk is replicated:

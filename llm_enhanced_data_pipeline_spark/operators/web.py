@@ -311,16 +311,6 @@ def xml_unescape(c: Column) -> Column:
     return c
 
 
-def xml_unescape_sql(expr: str) -> str:
-    out = expr
-    for ent, ch in (
-        ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&apos;", "''"),
-        ("&amp;", "&"),
-    ):
-        out = f"replace({out}, '{ent}', '{ch}')"
-    return out
-
-
 def sitemap_urls(df: DataFrame, id_col: str, xml_col: str) -> DataFrame:
     """Declarative sitemap (sitemaps.org protocol) URL extraction —
     the crawl-frontier feed robots.txt ``Sitemap:`` lines point at:

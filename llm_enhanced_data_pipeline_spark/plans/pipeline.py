@@ -70,11 +70,6 @@ def merge_sources(sources: list[DataFrame]) -> DataFrame:
     return dedup.union_first_wins(keyed, "_k", ["_ord"]).drop("_k", "_ord")
 
 
-# Above this row count the quadratic D4-exact join is the pipeline's
-# scale-killer and the MinHash-banding path takes over by default.
-SIMILARITY_LSH_DEFAULT_THRESHOLD = 100_000
-
-
 def _dedup_stages(
     papers: DataFrame, similarity: str = "exact"
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -114,19 +109,19 @@ def _dedup_stages(
 def dedup_stage(papers: DataFrame, similarity: str = "exact") -> DataFrame:
     """D2 → D3 → D4 in the reference's order (strict_deduplication.py:79-92).
 
-    ``similarity`` picks the D4 engine:
+    ``similarity`` picks the D4 engine; nothing switches it by row
+    count, the caller chooses:
 
-    - ``"exact"`` — size-band-pruned pairwise Jaccard
+    - ``"exact"`` (the default) — size-band-pruned pairwise Jaccard
       (:func:`~..operators.dedup.dedup_similarity_exact`). Quadratic;
-      the oracle ground truth and the right choice below
-      ~``SIMILARITY_LSH_DEFAULT_THRESHOLD`` rows.
+      the oracle ground truth.
     - ``"lsh"`` — MinHash banding
       (:func:`~..operators.dedup.dedup_minhash_lsh`): candidates come
-      from band-key equi-joins (shuffle, never a cross product) — the
-      default at scale. The reference's keep-newest preference
-      (publish_year desc, arrival order asc; None counts as 0,
-      strict_deduplication.py:68-69) is preserved by encoding it into
-      the composite sort key the pair pruning orders on.
+      from band-key equi-joins (shuffle, never a cross product), so
+      it is the engine to pass at scale. The reference's keep-newest
+      preference (publish_year desc, arrival order asc; None counts
+      as 0, strict_deduplication.py:68-69) is preserved by encoding it
+      into the composite sort key the pair pruning orders on.
     """
     _, _, step3 = _dedup_stages(papers, similarity)
     return step3.drop("_toks", "_ord")
@@ -212,7 +207,6 @@ def final_build(
             "contributions": (contributions, {"problem": F.lit(""), "method": F.lit("")}),
         },
         key="paper_id",
-        broadcast_sides=False,
     )
     validated = (
         joined.withColumn("novelty", quality.validated_score(F.col("novelty"), default=0.0))

@@ -197,7 +197,6 @@ def enrichment_join_5way(spark: SparkSession, sf_dir: str) -> DataFrame:
             "events": (e, {"n_events": F.lit(0)}),
         },
         key="c_custkey",
-        broadcast_sides=False,
     )
     out = (
         base.join(F.broadcast(n), base.c_nationkey == n.n_nationkey, "left")

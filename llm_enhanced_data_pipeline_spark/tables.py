@@ -68,7 +68,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
             "ts_ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}

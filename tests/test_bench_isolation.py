@@ -1,103 +1,138 @@
-"""bench.py failure isolation: one broken query must not zero the
-round's bench record (round 3 lost its entire bench to a single
+"""bench.py's output contract and failure isolation: the run ends with
+ONE parseable JSON line on stdout, and one broken query must not zero
+the round's bench record (round 3 lost its entire bench to a single
 loader exception)."""
 
 from __future__ import annotations
 
 import json
-
-import pytest
+import statistics
 
 import bench
 from llm_enhanced_data_pipeline_spark.queries.registry import QuerySpec
 
-
-def _payload(capsys):
-    """The full payload line from captured stdout. bench.py prints the
-    payload and then the compact truncation-proof {"headline": ...}
-    line LAST (r14) — so the payload is the last line carrying
-    "metric", not the last line."""
-    lines = capsys.readouterr().out.strip().splitlines()
-    return json.loads([l for l in lines if '"metric"' in l][-1])
+#: the keys the bench reader parsed from the r01-r06 records
+READER_KEYS = {"metric", "value", "unit", "n_failed", "queries", "sf"}
 
 
-import pytest
-
-
-@pytest.fixture(autouse=True)
-def _tiny_calibration(monkeypatch):
-    """Keep the r12 calibration slot out of these tests' way: 1 MiB per
-    thread instead of 768 and one rep per side — the normalization math
-    has its own dedicated tests below."""
-    monkeypatch.setattr(bench, "CALIB_MB", 1)
-    monkeypatch.setattr(bench, "CALIB_REPS", 1)
-
-
-def test_one_broken_query_does_not_zero_the_bench(spark, monkeypatch, capsys):
-    def good(s, sf_dir):
-        return s.range(10)
-
-    def broken(s, sf_dir):
-        raise RuntimeError("synthetic loader failure")
-
-    fake_registry = {
-        "zz_good": QuerySpec(name="zz_good", fn=good, oracle=None, bench=True),
-        "aa_broken": QuerySpec(name="aa_broken", fn=broken, oracle=None, bench=True),
+def _run(spark, monkeypatch, capsys, fns):
+    """Run bench.main() over a fake registry of ``{name: fn}``; return
+    (exit code, or None when main returned, stdout, stderr)."""
+    registry = {
+        name: QuerySpec(name=name, fn=fn, oracle=None, bench=True)
+        for name, fn in fns.items()
     }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
+    monkeypatch.setattr(bench, "REGISTRY", registry)
     monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
     # the session fixture must survive bench's own stop() call
     monkeypatch.setattr(spark, "stop", lambda: None)
+    code = None
+    try:
+        bench.main()
+    except SystemExit as exc:
+        code = exc.code
+    captured = capsys.readouterr()
+    return code, captured.out, captured.err
 
-    bench.main()  # must NOT raise and must NOT sys.exit (one query green)
 
-    payload = _payload(capsys)
-    assert payload["queries"].keys() == {"zz_good"}
-    assert payload["errors"].keys() == {"aa_broken"}
-    assert "synthetic loader failure" in payload["errors"]["aa_broken"]
-    # a partial total must NOT masquerade as the headline value — the
-    # headline is nulled and the surviving sum moves to partial_total
-    assert payload["value"] is None
-    assert payload["n_failed"] == 1
-    assert payload["partial_total"] == payload["queries"]["zz_good"]
+def _record(stdout):
+    """The record: stdout must hold exactly this one line."""
+    lines = stdout.splitlines()
+    assert len(lines) == 1, lines
+    return json.loads(lines[0])
+
+
+def _good(s, sf_dir):
+    return s.range(10)
+
+
+def _raising(message):
+    def broken(s, sf_dir):
+        raise RuntimeError(message)
+
+    return broken
+
+
+def _recorded_reps(monkeypatch):
+    """Wrap bench.run_slot so a test can read every slot's reps."""
+    seen: list[list[float]] = []
+    real = bench.run_slot
+
+    def spy(run_rep):
+        secs = real(run_rep)
+        seen.append(secs)
+        return secs
+
+    monkeypatch.setattr(bench, "run_slot", spy)
+    return seen
+
+
+def test_bench_prints_one_driver_parseable_line(spark, monkeypatch, capsys):
+    """The bench reader parses the LAST line of a ~2,000-character tail
+    of the output. Rounds 7-15 printed payloads past that size or extra
+    lines after it and the reader got nothing: with 25 slots, 12 of them
+    failing with 500-character messages, stdout must still be one JSON
+    line under 2,000 characters, and the messages go to stderr only."""
+    names = [f"fake_slot_{i:02d}_padded_name" for i in range(25)]
+    broken = names[::2][:12]
+    messages = {n: f"{n} failed: ".ljust(500, "x") for n in broken}
+    fns = {n: _raising(messages[n]) if n in messages else _good for n in names}
+
+    code, out, err = _run(spark, monkeypatch, capsys, fns)
+
+    assert code is None
+    record = _record(out)
+    assert len(out.rstrip("\n")) <= 2000
+    assert READER_KEYS <= record.keys()
+    assert record["failed"] == broken
+    assert record["n_failed"] == 12
+    assert record["value"] is None
+    assert record["queries"].keys() == set(names) - set(broken)
+    for name, message in messages.items():
+        assert len(message) == 500
+        assert f"# {name}: ERROR RuntimeError: {message}" in err
+        assert message not in out
+
+
+def test_one_broken_query_does_not_zero_the_bench(spark, monkeypatch, capsys):
+    code, out, err = _run(
+        spark,
+        monkeypatch,
+        capsys,
+        {"zz_good": _good, "aa_broken": _raising("synthetic loader failure")},
+    )
+
+    assert code is None  # must NOT sys.exit (one query green)
+    record = _record(out)
+    assert record["queries"].keys() == {"zz_good"}
+    assert record["failed"] == ["aa_broken"]
+    assert "# aa_broken: ERROR RuntimeError: synthetic loader failure" in err
+    # a partial total must NOT masquerade as the headline value
+    assert record["value"] is None
+    assert record["n_failed"] == 1
 
 
 def test_clean_run_reports_zero_failed(spark, monkeypatch, capsys):
-    def good(s, sf_dir):
-        return s.range(10)
+    code, out, err = _run(spark, monkeypatch, capsys, {"only_good": _good})
 
-    fake_registry = {
-        "only_good": QuerySpec(name="only_good", fn=good, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
-    bench.main()
-
-    payload = _payload(capsys)
-    assert payload["n_failed"] == 0
-    assert "errors" not in payload
-    assert payload["value"] == payload["queries"]["only_good"]
+    assert code is None
+    record = _record(out)
+    assert record["n_failed"] == 0
+    assert record["failed"] == []
+    assert "ERROR" not in err
+    assert record["value"] == record["queries"]["only_good"]
 
 
 def test_all_queries_broken_exits_nonzero(spark, monkeypatch, capsys):
-    def broken(s, sf_dir):
-        raise RuntimeError("boom")
-
-    fake_registry = {
-        "only_broken": QuerySpec(name="only_broken", fn=broken, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
-    with pytest.raises(SystemExit) as exc:
-        bench.main()
-    assert exc.value.code == 1
-    payload = _payload(capsys)
-    assert payload["queries"] == {}
-    assert "only_broken" in payload["errors"]
+    code, out, err = _run(
+        spark, monkeypatch, capsys, {"only_broken": _raising("boom")}
+    )
+    assert code == 1
+    # the record is still printed before the non-zero exit
+    record = _record(out)
+    assert record["queries"] == {}
+    assert record["failed"] == ["only_broken"]
+    assert "# only_broken: ERROR RuntimeError: boom" in err
 
 
 class _FakeClock:
@@ -120,6 +155,7 @@ def test_stalled_slot_gets_recovery_reps_and_recovers(spark, monkeypatch, capsys
     is NOT flagged contaminated."""
     clock = _FakeClock()
     monkeypatch.setattr(bench.time, "perf_counter", clock.perf_counter)
+    reps = _recorded_reps(monkeypatch)
     calls = {"n": 0}
 
     def stall_then_calm(s, sf_dir):
@@ -129,32 +165,27 @@ def test_stalled_slot_gets_recovery_reps_and_recovers(spark, monkeypatch, capsys
         clock.t += 1.2 if 2 <= calls["n"] <= 3 else 0.3
         return s.range(5)
 
-    fake_registry = {
-        "stall": QuerySpec(name="stall", fn=stall_then_calm, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
+    code, out, err = _run(spark, monkeypatch, capsys, {"stall": stall_then_calm})
 
-    bench.main()
-
-    payload = _payload(capsys)
-    spread = payload["query_spreads"]["stall"]
-    assert spread["n"] == bench.REPS + bench.MAX_EXTRA_REPS  # extras granted
+    assert code is None
+    record = _record(out)
+    [secs] = reps
+    assert len(secs) == bench.REPS + bench.MAX_EXTRA_REPS  # extras granted
     # median over [s, s, f, f, f] is a calm rep -> recovered, not flagged
-    assert spread["median"] / spread["min"] <= bench.STALL_RATIO
-    assert payload["contaminated"] is False
-    assert payload["contaminated_slots"] == []
-    assert payload["loadavg_before"] is not None  # /proc/loadavg on linux
-    assert payload["loadavg_after"] is not None
+    assert statistics.median(secs) / min(secs) <= bench.STALL_RATIO
+    assert record["queries"]["stall"] == round(statistics.median(secs), 4)
+    assert record["contaminated"] is False
+    assert "contamination" not in err
+    assert record["loadavg_before"] is not None  # /proc/loadavg on linux
 
 
 def test_persistent_stall_marks_record_contaminated(spark, monkeypatch, capsys):
     """When the spread stays pathological after every recovery rep, the
-    payload must say so — a poisoned record that doesn't declare itself
+    record must say so — a poisoned record that doesn't declare itself
     is exactly how BENCH_r08 shipped."""
     clock = _FakeClock()
     monkeypatch.setattr(bench.time, "perf_counter", clock.perf_counter)
+    reps = _recorded_reps(monkeypatch)
     calls = {"n": 0}
 
     def alternating(s, sf_dir):
@@ -165,20 +196,15 @@ def test_persistent_stall_marks_record_contaminated(spark, monkeypatch, capsys):
         clock.t += 1.2 if calls["n"] % 2 == 0 else 0.3
         return s.range(5)
 
-    fake_registry = {
-        "flaky": QuerySpec(name="flaky", fn=alternating, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
+    code, out, err = _run(spark, monkeypatch, capsys, {"flaky": alternating})
 
-    bench.main()
-
-    payload = _payload(capsys)
-    assert payload["contaminated"] is True
-    assert payload["contaminated_slots"] == ["flaky"]
-    spread = payload["query_spreads"]["flaky"]
-    assert spread["median"] / spread["min"] > bench.STALL_RATIO
+    assert code is None
+    record = _record(out)
+    assert record["contaminated"] is True
+    assert "contamination survived the recovery reps on ['flaky']" in err
+    [secs] = reps
+    assert len(secs) == bench.REPS + bench.MAX_EXTRA_REPS
+    assert statistics.median(secs) / min(secs) > bench.STALL_RATIO
 
 
 def test_run_slot_no_extra_reps_when_spread_is_clean():
@@ -213,9 +239,6 @@ def test_bench_baseline_pin_matches_the_bench_slot_set():
         f"stale={set(baseline['slots_sec']) - expected}"
     )
     assert all(v > 0 for v in baseline["slots_sec"].values())
-    assert baseline["legacy_13slot_subtotal_band"][0] <= baseline[
-        "legacy_13slot_subtotal_band"
-    ][1]
 
 
 def test_shared_minhash_consumer_list_is_tight():
@@ -274,210 +297,6 @@ def test_bench_force_actually_computes_all_columns(spark):
     assert "xxhash64" in kept and "sha2" in kept  # real work retained
 
 
-def test_ambient_load_flag_on_high_start_loadavg(spark, monkeypatch, capsys):
-    """r9 judge finding: two runs passed contaminated=false while
-    15-40% inflated by UNIFORM post-suite residual load (median and
-    min shift together, so the one-sided ratio check is blind). The
-    5-min start loadavg must gate the record."""
-    monkeypatch.setattr(bench, "read_loadavg", lambda: [0.9, 0.62, 0.5])
-
-    def good(s, sf_dir):
-        return s.range(10)
-
-    fake_registry = {
-        "g": QuerySpec(name="g", fn=good, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
-    bench.main()
-
-    payload = _payload(capsys)
-    assert payload["ambient_load"] is True
-    assert any("loadavg" in r for r in payload["ambient_load_reasons"])
-    assert payload["ambient_load_max"] == bench.AMBIENT_LOAD_MAX
-    # the flag is orthogonal to per-slot stall contamination
-    assert payload["contaminated"] is False
-
-
-def test_quiet_machine_run_is_not_flagged(spark, monkeypatch, capsys):
-    monkeypatch.setattr(bench, "read_loadavg", lambda: [0.0, 0.0, 0.0])
-
-    def good(s, sf_dir):
-        return s.range(10)
-
-    fake_registry = {
-        "g": QuerySpec(name="g", fn=good, oracle=None, bench=True)
-    }
-    monkeypatch.setattr(bench, "REGISTRY", fake_registry)
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
-    bench.main()
-
-    payload = _payload(capsys)
-    assert payload["ambient_load"] is False
-    assert payload["ambient_load_reasons"] == []
-
-
-def test_subtotal_outside_pinned_band_flags_the_record():
-    """Second uniform-load detector: a full legacy slot set whose
-    subtotal lands outside bench_baseline.json's quiet-machine band is
-    flagged in BOTH directions (above = load/regression; below =
-    re-pin or artifact). Partial slot sets (unit-test registries,
-    failed slots) are exempt — their subtotal is meaningless."""
-    baseline = json.load(open("bench_baseline.json"))
-    lo, hi = baseline["legacy_13slot_subtotal_band"]
-    n = len(bench.LEGACY_SLOT_NAMES)
-
-    def timings_summing_to(total):
-        return {k: total / n for k in bench.LEGACY_SLOT_NAMES}
-
-    quiet = [0.0, 0.0, 0.0]
-    inside = bench.ambient_load_reasons(
-        quiet, timings_summing_to((lo + hi) / 2), {}, bench.LEGACY_SLOT_NAMES
-    )
-    assert inside == []
-    above = bench.ambient_load_reasons(
-        quiet, timings_summing_to(hi * 1.5), {}, bench.LEGACY_SLOT_NAMES
-    )
-    assert any("outside the pinned" in r for r in above)
-    below = bench.ambient_load_reasons(
-        quiet, timings_summing_to(lo * 0.5), {}, bench.LEGACY_SLOT_NAMES
-    )
-    assert any("outside the pinned" in r for r in below)
-    # partial slot set: band check skipped, loadavg check still live
-    partial = bench.ambient_load_reasons(
-        quiet, {"cosine_topk": 99.0}, {}, bench.LEGACY_SLOT_NAMES
-    )
-    assert partial == []
-    loaded = bench.ambient_load_reasons(
-        [2.0, 1.5, 1.0], {"cosine_topk": 99.0}, {}, bench.LEGACY_SLOT_NAMES
-    )
-    assert any("loadavg" in r for r in loaded)
-    # error in a NON-legacy slot: all 14 legacy timings are present and
-    # comparable, so the band check still applies (r10 ADVICE: an
-    # any-error exemption was a false-negative path for the gate)
-    nonlegacy_err = bench.ambient_load_reasons(
-        quiet, timings_summing_to(hi * 1.5), {"x": "boom"},
-        bench.LEGACY_SLOT_NAMES,
-    )
-    assert any("outside the pinned" in r for r in nonlegacy_err)
-    # error in a LEGACY slot: subtotal covers fewer slots -> skipped
-    legacy_err_timings = timings_summing_to(hi * 1.5)
-    legacy_err = bench.ambient_load_reasons(
-        quiet, legacy_err_timings, {"cosine_topk": "boom"},
-        bench.LEGACY_SLOT_NAMES,
-    )
-    assert legacy_err == []
-
-
-def test_calibration_run_is_positive_and_scales_with_work():
-    fast = bench.calibration_run(1)
-    assert fast > 0
-    # 32x the bytes must cost visibly more than 1x (loose: >2x — the
-    # point is it genuinely measures the machine, not a constant)
-    slow = bench.calibration_run(32)
-    assert slow > 2 * fast
-
-
-def test_uniform_slowdown_normalizes_back_inside_band():
-    """The r11 adjudication gap: a uniformly loaded host (every slot
-    AND the calibration inflated by the same factor) must still yield
-    normalized ratios ~1 and a normalized legacy subtotal inside the
-    pinned quiet-machine band — an adjudicable record."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    lo, hi = baseline["legacy_13slot_subtotal_band"]
-    quiet_legacy = sum(
-        v for k, v in pinned.items() if k in bench.LEGACY_SLOT_NAMES
-    )
-    # the pin stores per-slot MINs, so a clean subtotal sits slightly
-    # above the raw pin sum; emulate a realistic clean run mid-band
-    scale_to_mid = ((lo + hi) / 2) / quiet_legacy
-    inflate = 1.7  # the r11 judge-host inflation
-    timings = {k: v * scale_to_mid * inflate for k, v in pinned.items()}
-    legacy_total = sum(
-        v for k, v in timings.items() if k in bench.LEGACY_SLOT_NAMES
-    )
-    assert not lo <= legacy_total <= hi  # raw record would self-flag
-    out = bench.normalize_record(timings, legacy_total, inflate, baseline)
-    assert out["normalized_in_band"] is True
-    assert lo <= out["normalized_legacy_subtotal"] <= hi
-    for slot, ratio in out["normalized_ratios"].items():
-        assert abs(ratio - scale_to_mid) < 0.01, slot
-
-
-def test_single_slot_regression_survives_normalization():
-    """A real plan regression must NOT be normalized away: on an
-    otherwise-quiet machine (calibration ratio 1) one slot at 3x its
-    pin stands out while its siblings sit at 1."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    timings = dict(pinned)
-    timings["corpus_build_v4"] = pinned["corpus_build_v4"] * 3.0
-    out = bench.normalize_record(timings, None, 1.0, baseline)
-    ratios = out["normalized_ratios"]
-    assert ratios["corpus_build_v4"] == 3.0
-    others = [v for k, v in ratios.items() if k != "corpus_build_v4"]
-    assert all(abs(v - 1.0) < 0.01 for v in others)
-    # and a uniform load on TOP of the regression still isolates it
-    loaded = {k: v * 1.6 for k, v in timings.items()}
-    out2 = bench.normalize_record(loaded, None, 1.6, baseline)
-    assert out2["normalized_ratios"]["corpus_build_v4"] == 3.0
-
-
-def test_normalized_band_check_is_one_sided():
-    """Below-floor is a SPEEDUP (or band staleness), not a regression:
-    the r12 driver record — the fastest normalized subtotal on file
-    (9.31s vs band floor 9.8) — read ``normalized_in_band: false``
-    under the old two-sided check purely for being fast. Below-floor
-    must stay in-band and carry the informational
-    ``normalized_below_band`` flag; only above-CEILING is the
-    regression signal."""
-    baseline = bench.load_baseline()
-    lo, hi = baseline["legacy_13slot_subtotal_band"]
-    fast = bench.normalize_record({}, lo * 0.8, 1.0, baseline)
-    assert fast["normalized_in_band"] is True
-    assert fast["normalized_below_band"] is True
-    mid = bench.normalize_record({}, (lo + hi) / 2, 1.0, baseline)
-    assert mid["normalized_in_band"] is True
-    assert mid["normalized_below_band"] is False
-    slow = bench.normalize_record({}, hi * 1.2, 1.0, baseline)
-    assert slow["normalized_in_band"] is False
-    assert slow["normalized_below_band"] is False
-
-
-def test_unstable_calibration_suppresses_normalized_fields():
-    """When the before/after calibration medians disagree >2x (load
-    arrived or left MID sweep), no scalar can normalize the record —
-    different slots saw different machines. The normalized_* fields
-    must be absent (a consumer reading only normalized_in_band can
-    never adjudicate such a record) and normalized_unreliable: true
-    must mark why."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    out = bench.normalize_record(
-        dict(pinned), 11.0, 1.5, baseline, calib_unstable=True
-    )
-    assert out == {"normalized_unreliable": True}
-    # stable path unchanged: fields present, no unreliable marker
-    ok = bench.normalize_record(
-        dict(pinned), 11.0, 1.0, baseline, calib_unstable=False
-    )
-    assert "normalized_in_band" in ok
-    assert "normalized_unreliable" not in ok
-
-
-def test_no_calibration_pin_degrades_to_raw_only_record():
-    assert bench.normalize_record({"q1_pricing_summary": 1.0}, 1.0, None, {}) == {}
-    assert (
-        bench.normalize_record({"q1_pricing_summary": 1.0}, 1.0, 0.0, {"slots_sec": {}})
-        == {}
-    )
-
-
 def test_every_sweep_deselect_has_a_slice_twin_in_the_sweep():
     """sweep_sf01.sh's deselect list must not rot into a blind spot
     again (r11 verdict item 3): every deselected gate needs a _sliced
@@ -513,143 +332,3 @@ def test_every_sweep_deselect_has_a_slice_twin_in_the_sweep():
     for name in deselected:
         for c in (f"{name}_sliced", f"{name}_sampled"):
             assert c not in deselected
-
-
-def test_calibration_instability_math():
-    """The side-min rule + the instability flag, against the two live
-    r12 observations: an after-side spike must not over-correct (the
-    min side wins) and a >2x side disagreement marks the scalar
-    unusable for that record."""
-    import statistics
-
-    # observation 1: late mild spike — min side normalizes in-band
-    before, after = [1.039, 1.2335, 1.4366], [1.749, 1.9379, 3.0731]
-    side = min(statistics.median(before), statistics.median(after))
-    assert round(side / 1.08, 2) == 1.14  # the in-band correction
-    # observation 2: mid-sweep slam — sides disagree 10x: unstable
-    before2, after2 = [0.8555, 0.8003, 1.0523], [7.8602, 12.9843, 10.8871]
-    m_b, m_a = statistics.median(before2), statistics.median(after2)
-    assert max(m_b, m_a) / min(m_b, m_a) > 2.0
-
-
-def test_additive_load_signature_detected_and_suppresses_normalization():
-    """The r13 driver record's failure mode: sub-second slots at
-    3.3-4.4x their pins while multi-second slots sit at 1.0-1.6x — an
-    ADDITIVE per-slot overhead (~1-2s of scheduling contention each)
-    that no multiplicative scalar can represent, with a calibration
-    that reads stable. inflation_profile must stamp ambient_additive
-    and normalize_record must suppress the normalized fields."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    # additive contention: +1.2s on every slot (the r13 shape)
-    timings = {k: v + 1.2 for k, v in pinned.items()}
-    prof = bench.inflation_profile(timings, pinned)
-    assert prof["small_slot_median_ratio"] > 3.0
-    assert prof["large_slot_median_ratio"] < 2.3
-    assert prof["small_vs_large_divergence"] > 2.0
-    assert prof["ambient_additive"] is True
-    out = bench.normalize_record(
-        timings, 18.4, 1.1, baseline, ambient_additive=True
-    )
-    assert out == {"normalized_unreliable": True}
-
-
-def test_quiet_and_uniform_hosts_do_not_trip_the_additive_flag():
-    """Both medians near 1.0 (quiet) or uniformly inflated (slow CPU,
-    uniform load) are MULTIPLICATIVE shapes: small/large divergence
-    stays ~1 and ambient_additive stays false — normalization remains
-    available exactly when it is meaningful."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    quiet = bench.inflation_profile(
-        {k: v * 1.05 for k, v in pinned.items()}, pinned
-    )
-    assert quiet["ambient_additive"] is False
-    uniform = bench.inflation_profile(
-        {k: v * 1.8 for k, v in pinned.items()}, pinned
-    )
-    assert uniform["ambient_additive"] is False
-    assert uniform["small_vs_large_divergence"] == 1.0
-
-
-def test_heavy_subtotal_is_robust_to_additive_jitter():
-    """The heavy (>=1s-pin) subtotal is the primary loaded-host
-    adjudication number: the additive contention that blows the
-    legacy band (ten sub-second slots each +1.2s) moves the
-    multi-second-slot sum by only a bounded fraction, keeping it
-    inside its own band."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    lo, hi = baseline["heavy_subtotal_band"]
-    heavy_names = {k for k, v in pinned.items() if v >= bench.HEAVY_PIN_CUTOFF}
-    assert len(heavy_names) >= 8
-    # the r13-driver shape: +1.2s additive on EVERY slot; heavy slots
-    # gain 11*1.2 = ~13.2s over the 24.8s pinned sum -> within ~1.27x
-    timings = {k: v + 1.2 for k, v in pinned.items()}
-    out = bench.heavy_subtotal_fields(timings, {}, baseline)
-    assert out["heavy_slot_count"] == len(heavy_names)
-    assert out["heavy_subtotal"] == round(
-        sum(timings[k] for k in heavy_names), 4
-    )
-    # sanity on the band itself: the pinned-min sum sits inside it
-    pin_sum = sum(pinned[k] for k in heavy_names)
-    assert lo <= pin_sum * 1.1 <= hi
-    # one-sided: a genuine heavy regression (every heavy slot 2x)
-    # lands ABOVE the ceiling
-    slow = bench.heavy_subtotal_fields(
-        {k: v * 2.0 for k, v in pinned.items()}, {}, baseline
-    )
-    assert slow["heavy_in_band"] is False
-    fast = bench.heavy_subtotal_fields(dict(pinned), {}, baseline)
-    assert fast["heavy_in_band"] is True
-    # an error in a heavy slot voids the subtotal (partial sum would
-    # read as a fake speedup)
-    assert (
-        bench.heavy_subtotal_fields(
-            timings, {"host_pagerank": "boom"}, baseline
-        )
-        == {}
-    )
-
-
-def test_correction_ratio_cap_against_the_r13_judge_host():
-    """The judge's r13 run: pure-CPU calibration 2.43x but slots only
-    1.1-2.1x (median 1.45) — dividing by the full 2.43 normalized the
-    subtotal below the band floor. The capped ratio min(calib, max(1,
-    large_slot_median)) keeps the correction within what the slots
-    actually measured."""
-    baseline = bench.load_baseline()
-    pinned = baseline["slots_sec"]
-    lo, hi = baseline["legacy_13slot_subtotal_band"]
-    timings = {k: v * 1.45 for k, v in pinned.items()}
-    prof = bench.inflation_profile(timings, pinned)
-    capped = min(2.43, max(1.0, prof["large_slot_median_ratio"]))
-    assert abs(capped - 1.45) < 0.01
-    legacy_total = sum(
-        v for k, v in timings.items() if k in bench.LEGACY_SLOT_NAMES
-    )
-    out = bench.normalize_record(timings, legacy_total, capped, baseline)
-    # with the cap the normalized subtotal stays physically meaningful
-    # (>= the pinned-min sum, i.e. not below what a quiet host can do)
-    quiet_sum = sum(
-        v for k, v in pinned.items() if k in bench.LEGACY_SLOT_NAMES
-    )
-    assert out["normalized_legacy_subtotal"] >= quiet_sum * 0.99
-    # whereas the uncapped 2.43 correction lands below the floor
-    raw = bench.normalize_record(timings, legacy_total, 2.43, baseline)
-    assert raw["normalized_legacy_subtotal"] < lo
-    # a fast host (ratio < 1) is never corrected upward
-    assert min(0.9, max(1.0, 0.8)) == 0.9
-
-
-def test_unstable_calibration_marker_survives_missing_ratio():
-    """r13 ADVICE: a record with unstable calibration AND a missing or
-    zero calibration ratio must still carry normalized_unreliable —
-    the 'calibration disavows this record' signal — instead of
-    silently degrading to raw-only."""
-    baseline = bench.load_baseline()
-    for ratio in (None, 0.0):
-        out = bench.normalize_record(
-            {}, 11.0, ratio, baseline, calib_unstable=True
-        )
-        assert out == {"normalized_unreliable": True}, ratio

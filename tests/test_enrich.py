@@ -377,20 +377,3 @@ def test_sentence_transformer_embedder_real_model(spark):
     rows = {r.doc_id: r.embedding for r in out.collect()}
     assert len(rows) == 3
     assert all(len(v) == 384 for v in rows.values())
-
-
-def test_adaptive_rate_limiter_scales_both_ways():
-    from llm_enhanced_data_pipeline_spark.enrich.client import AdaptiveRateLimiter
-
-    rl = AdaptiveRateLimiter(min_delay=0.001, max_delay=1.0)
-    start = rl.current_delay
-    for _ in range(30):
-        rl.record(True)
-    assert rl.current_delay < start  # healthy window shrinks the delay
-    shrunk = rl.current_delay
-    rl.record(False)
-    rl.record(False)
-    assert rl.current_delay >= shrunk * 4  # failures multiply it up
-    for _ in range(200):
-        rl.record(True)
-    assert abs(rl.current_delay - 0.001) < 1e-9  # floors at min_delay

@@ -222,9 +222,8 @@ def test_ablation_corpus_retention_golden(spark):
     efficiency 73.1689…%; `analysis_summary.txt:7-8`). The engineered
     corpus packs the removals into the dedup stage (16,024 unique
     titles + 5,876 exact-title recrawls under fresh ids) and runs the
-    production D2→D3→D4 chain with the LSH similarity engine — the
-    default above SIMILARITY_LSH_DEFAULT_THRESHOLD, which 21,900 rows
-    is under only because the fixture is local."""
+    production D2→D3→D4 chain with the LSH similarity engine, passed
+    explicitly (``dedup_stage`` never picks it by row count)."""
     base = spark.range(16024).select(
         F.lit("arxiv").alias("source"),
         F.format_string("25%05d", "id").alias("paper_id"),
