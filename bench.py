@@ -28,7 +28,8 @@ Methodology:
   no rep is served from an earlier rep's cache.
 - Stall recovery: see ``run_slot``; ``contaminated`` is true when a
   slot's spread stays stall-shaped after the recovery reps, and such a
-  record must not back a comparison.
+  record must not back a comparison. With one rep per slot the check
+  cannot run and ``contaminated`` is null.
 """
 
 from __future__ import annotations
@@ -205,7 +206,8 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "reps_per_slot": REPS,
-        "contaminated": bool(contaminated),
+        # the stall check compares reps, so one rep means it did not run
+        "contaminated": bool(contaminated) if REPS >= 2 else None,
         "loadavg_before": loadavg_before,
     }
     spark.stop()

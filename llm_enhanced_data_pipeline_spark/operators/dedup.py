@@ -10,8 +10,10 @@ Scale posture (100 TB): every keep-one is a window over a hash
 partition (shuffle on the dedup key only, no global sort); the fuzzy
 family avoids the reference's O(n^2) loop via MinHash banding / SimHash
 bucketing so candidate generation is an equi-join, with the exact
-pairwise check only inside buckets. The plain pairwise variants are
-kept for small inputs and as the oracle-checkable ground truth.
+pairwise check only inside buckets. The exact Jaccard forms (D4's
+:func:`dedup_similarity_exact`, :func:`near_dup_pairs_ngram`) are
+equi-joins too: prefix-filtered candidates (:func:`_prefix_rows`),
+each verified by the exact Jaccard compare.
 
 Greedy-chain note: the reference's O(n^2) loop removes j only when its
 earlier partner i itself survived. That sequential rule is inherently
@@ -22,6 +24,8 @@ is transitive within groups (the common case for >=0.9 thresholds).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,10 +58,6 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     cached = df.persist()
     _LIVE_CACHES.append(cached)
     return cached
-
-
-#: backwards-compat alias (pre-r7 internal name)
-_persist_tracked = persist_tracked
 
 
 # localCheckpoint block registry: (SparkContext, persistent-RDD ids).
@@ -266,9 +266,67 @@ def word_shingles(toks: Column, n: int) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
 
 
-# D4 — similarity dedup, exact pairwise form ("remove if any earlier
-# similar row exists"). Quadratic — correct for modest partitions and
-# the oracle ground truth for the LSH path.
+# D4 — similarity dedup, exact form ("remove if any earlier similar row
+# exists"). Candidates come from a prefix-filtered equi-join, so there
+# is no all-pairs join; every candidate is verified by the exact
+# Jaccard compare, so the survivors equal the all-pairs definition's.
+
+def _prefix_rows(sets: DataFrame, threshold: float) -> DataFrame:
+    """The rows of ``sets`` (a distinct array ``set`` plus key columns)
+    whose set is non-empty, with ``set`` reordered rarest element first
+    and one row per prefix element ``_e``: the first ``_p`` =
+    |S| - ceil(t*|S|) + 1 elements. If Jaccard(A, B) >= t, the two
+    prefixes share an element under any one total order (the
+    prefix-filter lemma, Bayardo et al. WWW'07), so a self-join on
+    ``_e`` finds every pair.
+
+    The order, (document frequency, element), sets the join's bucket
+    sizes: stopwords such as 'a' or 'and' sort last and stay out of
+    most prefixes, where a sorted order would put them into most title
+    prefixes. The count is a window over the exploded elements, so the
+    input is read once. t is held as floor((t - 5e-7) * 1000) per mille
+    and the ceiling is integer arithmetic: flooring only lengthens the
+    prefix, and the slack covers a verify of J rounded to 6 places.
+    Known limit: a vocabulary in which every element is in most sets
+    defeats any prefix filter.
+    """
+    if not 0 < threshold <= 1:
+        raise ValueError(f"Jaccard threshold must be in (0, 1], got {threshold!r}")
+    t_pm = math.floor((threshold - 5e-7) * 1000)
+    keys = [c for c in sets.columns if c != "set"]
+    elems = sets.select(*keys, F.explode("set").alias("_e")).withColumn(
+        "_df", F.count(F.lit(1)).over(Window.partitionBy("_e"))
+    )
+    ranked = F.array_sort(F.collect_list(F.struct("_df", "_e")))
+    return (
+        elems.groupBy(*keys)
+        .agg(F.transform(ranked, lambda x: x["_e"]).alias("set"))
+        .withColumn("_p", F.expr(f"size(set) - (({t_pm} * size(set) + 999) div 1000) + 1"))
+        .withColumn("_e", F.explode(F.slice("set", 1, F.col("_p"))))
+    )
+
+
+def _prefix_pairs(sets: DataFrame, threshold: float, precedes: Column) -> DataFrame:
+    """Candidate pairs of ``sets`` (columns ``id``, ``set``, …): its
+    :func:`_prefix_rows` self-joined on a shared prefix element, with
+    the columns of each side prefixed ``_l`` / ``_r`` (``_lid``, …).
+    ``precedes`` orders a pair. The size band is a lossless prune:
+    Jaccard(A, B) <= min(|A|, |B|) / max(|A|, |B|). A pair that shares
+    several prefix elements is kept once, at its first shared one."""
+    rows = _prefix_rows(sets, threshold)
+    left, right = (
+        rows.select(*[F.col(c).alias(f"_{side}{c.strip('_')}") for c in rows.columns])
+        for side in "lr"
+    )
+    sl, sr = F.size("_lset").cast("double"), F.size("_rset").cast("double")
+    size_band = (sl * threshold <= sr) & (sr * threshold <= sl)
+    first_shared = F.array_intersect(
+        F.slice("_lset", 1, F.col("_lp")), F.slice("_rset", 1, F.col("_rp"))
+    )[0]
+    return left.join(
+        right, F.col("_le").eqNullSafe(F.col("_re")) & precedes & size_band
+    ).filter(first_shared.eqNullSafe(F.col("_le")))
+
 
 def dedup_similarity_exact(
     df: DataFrame,
@@ -277,58 +335,37 @@ def dedup_similarity_exact(
     threshold: float = 0.9,
     prefer_desc_col: str | None = None,
 ) -> DataFrame:
-    """Keep-first fuzzy dedup.
+    """Keep-first fuzzy dedup: a row is dropped when any predecessor has
+    Jaccard >= ``threshold`` (0 < threshold <= 1) over the distinct
+    tokens. Empty token sets match nothing. ``id_col`` identifies a row.
 
     ``prefer_desc_col`` mirrors the reference's keep-newest rule: rows
-    are ordered by (prefer desc, id asc) and a row is dropped when any
-    predecessor in that order has Jaccard >= threshold.
+    are ordered by (prefer desc, id asc), else by id asc.
     """
-    toks = F.array_distinct(F.col(token_col))
-    base = df.withColumn("_set", toks)
-    # Lossless size-band prune: jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|),
-    # so pairs whose set sizes differ by more than the threshold ratio
-    # cannot match — the quadratic join only compares size-compatible
-    # rows. Output is provably unchanged.
-    size_band = (
-        F.size("_lset").cast("double") * threshold <= F.size("_rset").cast("double")
-    ) & (F.size("_rset").cast("double") * threshold <= F.size("_lset").cast("double"))
-    if prefer_desc_col:
-        # Falsy-to-0 like the reference ('publish_year or 0',
-        # strict_deduplication.py:68-69): a null preference must still
-        # order (a null comparison would null the join predicate and
-        # silently keep both rows of a near-dup pair).
-        pref = F.coalesce(F.col(prefer_desc_col), F.lit(0))
-        left_cols = [
-            F.col(id_col).alias("_lid"),
-            pref.alias("_lpref"),
-            F.col("_set").alias("_lset"),
-        ]
-        right_cols = [
-            F.col(id_col).alias("_rid"),
-            pref.alias("_rpref"),
-            F.col("_set").alias("_rset"),
-        ]
-        precedes = (F.col("_lpref") > F.col("_rpref")) | (
-            (F.col("_lpref") == F.col("_rpref")) & (F.col("_lid") < F.col("_rid"))
-        )
-    else:
-        left_cols = [F.col(id_col).alias("_lid"), F.col("_set").alias("_lset")]
-        right_cols = [F.col(id_col).alias("_rid"), F.col("_set").alias("_rset")]
-        precedes = F.col("_lid") < F.col("_rid")
+    # Falsy-to-0 like the reference ('publish_year or 0',
+    # strict_deduplication.py:68-69): a null preference must still
+    # order (a null comparison would null the join predicate and
+    # silently keep both rows of a near-dup pair).
+    pref = F.coalesce(F.col(prefer_desc_col), F.lit(0)) if prefer_desc_col else F.lit(0)
+    sets = df.select(
+        F.col(id_col).alias("id"),
+        pref.alias("pref"),
+        F.array_distinct(F.col(token_col)).alias("set"),
+    )
+    precedes = (F.col("_lpref") > F.col("_rpref")) | (
+        (F.col("_lpref") == F.col("_rpref")) & (F.col("_lid") < F.col("_rid"))
+    )
     dup_ids = (
-        base.select(*left_cols)
-        .join(base.select(*right_cols), precedes & size_band)
-        .filter(F.size("_rset") > 0)
-        .filter(F.size("_lset") > 0)
+        _prefix_pairs(sets, threshold, precedes)
         .filter(jaccard_token_sets(F.col("_lset"), F.col("_rset")) >= F.lit(threshold))
         .select(F.col("_rid").alias(id_col))
         .distinct()
     )
-    return base.join(dup_ids, id_col, "left_anti").drop("_set")
+    return df.join(dup_ids, id_col, "left_anti")
 
 
-# MinHash + LSH banding — the 100 TB path for D4. Candidate pairs come
-# from equality joins on band keys (shuffle, no cross product); each
+# MinHash + LSH banding — the approximate near-dup path. Candidate pairs
+# come from equality joins on band keys (shuffle, no cross product); each
 # candidate is verified with the exact Jaccard.
 
 def _band_key_cols(num_hashes: int, bands: int) -> list[Column]:
@@ -409,7 +446,7 @@ def minhash_grouped(
         sig_cols.append(
             F.min((F.col("_sh") * a + b) % hashing.MINHASH_PRIME).alias(f"_s{i}")
         )
-    frame = _persist_tracked(
+    frame = persist_tracked(
         rows.groupBy(id_col).agg(F.collect_set("_sh").alias("_hset"), *sig_cols)
     )
     # Materialize NOW: the pair join consumes this frame through three
@@ -474,24 +511,6 @@ def near_dup_pairs_minhash(
     )
 
 
-def dedup_minhash_lsh(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int | None = None,
-    grouped: DataFrame | None = None,
-) -> DataFrame:
-    """Keep-first fuzzy dedup at scale: drop b of every (a<b) near pair."""
-    pairs = near_dup_pairs_minhash(
-        df, id_col, token_col, threshold, num_hashes, bands, shingle_n, grouped
-    )
-    dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(dup_ids, id_col, "left_anti")
-
-
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -512,7 +531,7 @@ def connected_components(
 
     ``pairs`` needs columns (id_a, id_b).
     """
-    edges = _persist_tracked(
+    edges = persist_tracked(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
@@ -823,7 +842,7 @@ def near_dup_pairs_simhash(
     Requires blocks >= max_hamming + 1 for exact recall (pigeonhole on
     15-bit blocks of the 60-bit fingerprint).
     """
-    sh = _persist_tracked(simhash_by_id(df, id_col, token_col))
+    sh = persist_tracked(simhash_by_id(df, id_col, token_col))
     # materialize before the two-sided self-join reads it (same
     # unbuilt-cache re-alias hazard as minhash_grouped)
     sh.count()
@@ -854,7 +873,7 @@ def near_dup_pairs_phash(
         raise ValueError("pigeonhole recall needs blocks >= max_hamming + 1")
     from .multimodal import phash_by_id  # defer the numpy-heavy module
 
-    ph = _persist_tracked(
+    ph = persist_tracked(
         phash_by_id(df.select(F.col(id_col), F.col(payload_col)), id_col, payload_col)
     )
     ph.count()  # materialize before the two-sided self-join re-alias
@@ -884,7 +903,7 @@ def near_dup_pairs_audio_fp(
         raise ValueError("pigeonhole recall needs blocks >= max_hamming + 1")
     from .multimodal import audio_fp_by_id  # defer the numpy-heavy module
 
-    fp = _persist_tracked(
+    fp = persist_tracked(
         audio_fp_by_id(
             df.select(F.col(id_col), F.col(payload_col)), id_col, payload_col
         )
@@ -913,7 +932,7 @@ def near_dup_pairs_video_fp(
         raise ValueError("pigeonhole recall needs blocks >= max_hamming + 1")
     from .multimodal import video_fp_by_id  # defer the numpy-heavy module
 
-    fp = _persist_tracked(
+    fp = persist_tracked(
         video_fp_by_id(
             df.select(F.col(id_col), F.col(payload_col)), id_col, payload_col
         )
@@ -923,8 +942,9 @@ def near_dup_pairs_video_fp(
     return banded_hamming_pairs(fp, id_col, "video_fp", 63, max_hamming, blocks)
 
 
-# n-gram Jaccard near-dup: shingle then exact pairwise Jaccard (the
-# content-aware variant; word order matters through the shingles).
+# n-gram Jaccard near-dup: shingle, then the prefix-filtered Jaccard
+# join of dedup_similarity_exact (word order matters through the
+# shingles).
 
 def near_dup_pairs_ngram(
     df: DataFrame,
@@ -933,21 +953,16 @@ def near_dup_pairs_ngram(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    toks = tokens(F.col(text_col))
-    sh = df.select(
-        F.col(id_col), F.array_distinct(word_shingles(toks, n)).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    left = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
-    right = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    # same lossless size-band prune as dedup_similarity_exact
-    size_band = (
-        F.size("_sa").cast("double") * threshold <= F.size("_sb").cast("double")
-    ) & (F.size("_sb").cast("double") * threshold <= F.size("_sa").cast("double"))
+    """(id_a < id_b, jaccard) pairs whose distinct n-gram shingle sets
+    have Jaccard, rounded to 6 places, >= ``threshold`` (0 < threshold
+    <= 1)."""
+    shingles = F.array_distinct(word_shingles(tokens(F.col(text_col)), n))
+    sets = df.select(F.col(id_col).alias("id"), shingles.alias("set"))
+    jaccard = F.round(jaccard_token_sets(F.col("_lset"), F.col("_rset")), 6)
     return (
-        left.join(right, (F.col("id_a") < F.col("id_b")) & size_band)
-        .withColumn("jaccard", F.round(jaccard_token_sets(F.col("_sa"), F.col("_sb")), 6))
+        _prefix_pairs(sets, threshold, F.col("_lid") < F.col("_rid"))
+        .select(F.col("_lid").alias("id_a"), F.col("_rid").alias("id_b"), jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -1095,7 +1110,7 @@ def containment_pairs(
     """
     t_pm = round(threshold * 1000)
     if grouped is None:
-        grouped = _persist_tracked(
+        grouped = persist_tracked(
             shingle_hash_rows(df, id_col, token_col, shingle_n)
             .groupBy(id_col)
             .agg(F.collect_set("_sh").alias("_hset"))

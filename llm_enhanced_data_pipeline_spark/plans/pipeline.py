@@ -70,60 +70,31 @@ def merge_sources(sources: list[DataFrame]) -> DataFrame:
     return dedup.union_first_wins(keyed, "_k", ["_ord"]).drop("_k", "_ord")
 
 
-def _dedup_stages(
-    papers: DataFrame, similarity: str = "exact"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _dedup_stages(papers: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """D2 / D3 / D4 as separate frames (helper columns still attached)
     so callers can either take the final result or count each stage."""
     with_ord = papers.withColumn("_ord", F.monotonically_increasing_id())
     step1 = dedup.dedup_exact_null_preserving(with_ord, "paper_id", [F.col("_ord")])
     step2 = dedup.dedup_content_hash(step1, "title", [F.col("_ord")])
     toks = step2.withColumn("_toks", cleaning.tokens(F.col("title")))
-    if similarity == "lsh":
-        # Struct sort key: smaller == more preferred (newer year first,
-        # then arrival order), so "drop the greater id of a pair"
-        # reproduces the exact path's keep-newest rule.
-        keyed = toks.withColumn(
-            "_dkey",
-            F.struct(
-                (F.lit(2100) - F.coalesce(F.col("publish_year"), F.lit(0))).alias("p"),
-                F.col("_ord").alias("o"),
-            ),
-        )
-        step3 = dedup.dedup_minhash_lsh(
-            keyed, "_dkey", "_toks", threshold=0.9, num_hashes=16, bands=8
-        ).drop("_dkey")
-    elif similarity == "exact":
-        step3 = dedup.dedup_similarity_exact(
-            toks,
-            "_ord",
-            "_toks",
-            threshold=0.9,
-            prefer_desc_col="publish_year",
-        )
-    else:
-        raise ValueError(f"similarity must be 'exact' or 'lsh', got {similarity!r}")
+    step3 = dedup.dedup_similarity_exact(
+        toks, "_ord", "_toks", threshold=0.9, prefer_desc_col="publish_year"
+    )
     return step1, step2, step3
 
 
-def dedup_stage(papers: DataFrame, similarity: str = "exact") -> DataFrame:
+def dedup_stage(papers: DataFrame) -> DataFrame:
     """D2 → D3 → D4 in the reference's order (strict_deduplication.py:79-92).
 
-    ``similarity`` picks the D4 engine; nothing switches it by row
-    count, the caller chooses:
-
-    - ``"exact"`` (the default) — size-band-pruned pairwise Jaccard
-      (:func:`~..operators.dedup.dedup_similarity_exact`). Quadratic;
-      the oracle ground truth.
-    - ``"lsh"`` — MinHash banding
-      (:func:`~..operators.dedup.dedup_minhash_lsh`): candidates come
-      from band-key equi-joins (shuffle, never a cross product), so
-      it is the engine to pass at scale. The reference's keep-newest
-      preference (publish_year desc, arrival order asc; None counts
-      as 0, strict_deduplication.py:68-69) is preserved by encoding it
-      into the composite sort key the pair pruning orders on.
+    D4 is the exact title-token Jaccard >= 0.9 dedup
+    (:func:`~..operators.dedup.dedup_similarity_exact`) with the
+    reference's keep-newest preference (publish_year desc, arrival
+    order asc; None counts as 0, strict_deduplication.py:68-69). Its
+    candidates come from an equi-join on rarest-first title-word
+    prefixes, never a cross product, so words such as "a" or "the" do
+    not pair every title with every other.
     """
-    _, _, step3 = _dedup_stages(papers, similarity)
+    _, _, step3 = _dedup_stages(papers)
     return step3.drop("_toks", "_ord")
 
 
@@ -134,25 +105,30 @@ def run_with_counts(
     fields: DataFrame,
     contributions: DataFrame,
     min_citations: int = 0,
-    similarity: str = "exact",
 ) -> tuple[DataFrame, PipelineCounts]:
     """The full chain plus the reference's printed artifact: per-stage
     retention counts (strict_deduplication.py:31,44,75) and drop-reason
-    counters (bulid_final_dataset.py:372-388). Each count is one cheap
-    action over the already-built lineage."""
+    counters (bulid_final_dataset.py:372-388). Each count is one action.
+
+    The deduplicated frame is persisted for the four actions after D4,
+    so D4 runs once for them rather than once per action, and released
+    before returning: the returned frame recomputes from the sources."""
     counts = PipelineCounts()
     merged = merge_sources(sources)
     counts.merged = merged.count()
-    step1, step2, step3 = _dedup_stages(merged, similarity)
+    step1, step2, step3 = _dedup_stages(merged)
     counts.after_id_dedup = step1.count()
     counts.after_title_hash = step2.count()
-    deduped = step3.drop("_toks", "_ord")
-    counts.after_similarity = deduped.count()
-    aligned = align_stage(clean_stage(deduped), min_citations)
-    counts.after_citation_filter = aligned.count()
-    passed, reasons = final_build(aligned, scores, keywords, fields, contributions)
-    counts.final = passed.count()
-    counts.drop_reasons = {r.reason: r.n for r in reasons.collect()}
+    deduped = step3.drop("_toks", "_ord").persist()
+    try:
+        counts.after_similarity = deduped.count()
+        aligned = align_stage(clean_stage(deduped), min_citations)
+        counts.after_citation_filter = aligned.count()
+        passed, reasons = final_build(aligned, scores, keywords, fields, contributions)
+        counts.final = passed.count()
+        counts.drop_reasons = {r.reason: r.n for r in reasons.collect()}
+    finally:
+        deduped.unpersist(blocking=True)
     return passed, counts
 
 

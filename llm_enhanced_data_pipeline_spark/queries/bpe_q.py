@@ -26,7 +26,7 @@ ITERS = 12
 # analogue of a persisted tokenizer artifact: a corpus trains its BPE
 # once and every consumer (merge-table export, segmentation, token
 # stats) reads the same artifact. The merges list is driver-side data;
-# final_words is a lazy projection over a _persist_tracked base, so a
+# final_words is a lazy projection over a persist_tracked base, so a
 # dedup.release_caches() only costs a recompute, never wrong results.
 _TRAINED: dict[tuple[str, str, int], tuple[list, DataFrame]] = {}
 

@@ -147,7 +147,8 @@ def dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_fuzzy_jaccard",
     doc="D4: exact pairwise token-set Jaccard >= 0.95, keep the longer "
     "text (reference keeps newer year; strict_deduplication.py:48-76). "
-    "Quadratic ground-truth variant — the scale path is dedup_minhash.",
+    "Exact variant (prefix-filtered equi-join candidates); the "
+    "approximate MinHash path is dedup_minhash.",
     oracle=f"""
 WITH u AS ({_DOCS_WITH_NEAR_DUPS_SQL}),
 t AS (
@@ -1680,7 +1681,7 @@ _SLICE_WHERE = f" AND doc_id < {_LSH_SLICE_N}"
     "dedup_fuzzy_jaccard_sliced",
     doc="dedup_fuzzy_jaccard over the first-600-base-doc slice — the "
     "sf0.1-sweep twin of the full gate (all-pairs Jaccard oracle). "
-    "Same exact pairwise operator, same keep-the-longer policy.",
+    "Same exact Jaccard operator, same keep-the-longer policy.",
     oracle=f"""
 WITH u AS ({_docs_with_near_dups_sql(_SLICE_WHERE)}),
 t AS (

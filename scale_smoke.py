@@ -72,6 +72,47 @@ def replicated_embeddings(spark: SparkSession, r: int) -> DataFrame:
     )
 
 
+TITLE_STOPWORDS = (
+    "the", "of", "and", "a", "in", "for", "on", "with", "to", ":", "via",
+    "using", "-", "from", "an", "towards",
+)
+
+
+def zipf_titles(spark: SparkSession, n: int) -> DataFrame:
+    """``n`` synthetic paper titles (doc_id, title, publish_year) of 6-13
+    words over ONE vocabulary shared by the whole corpus, unlike the
+    replica-salted docs: about a third of the words are stopwords and
+    punctuation drawn Zipf-like from ``TITLE_STOPWORDS``, the rest are
+    content words ``w<rank>`` drawn Zipf-like (log-uniform rank) from
+    4n words, so the vocabulary grows with the corpus while the
+    stopwords' document frequency grows with it too. Every 10th title
+    repeats the previous one's words in reverse order: same token set,
+    different string, so only D4 removes it. Deterministic: every draw
+    is a hash of (title, word position)."""
+    def u(salt: int) -> str:
+        return f"((xxhash64(b, j, {salt}) & 9007199254740991) / 9007199254740992D)"
+
+    stop = ", ".join(f"'{w}'" for w in TITLE_STOPWORDS)
+    word = (
+        f"CASE WHEN {u(1)} < 0.35"
+        f" THEN element_at(array({stop}), CAST(floor(pow({len(TITLE_STOPWORDS) + 1}, {u(2)})) AS int))"
+        f" ELSE concat('w', CAST(floor(pow({4 * n + 1}, {u(3)})) AS bigint)) END"
+    )
+    words = F.expr(f"transform(sequence(1, 6 + CAST(pmod(xxhash64(b, 0), 8) AS int)), j -> {word})")
+    return (
+        spark.range(n)
+        .select(F.col("id").alias("doc_id"), F.expr("id - CAST(id % 10 = 9 AS bigint)").alias("b"))
+        .select(
+            "doc_id",
+            F.array_join(
+                F.when(F.col("doc_id") % 10 == 9, F.reverse(words)).otherwise(words), " "
+            ).alias("title"),
+            (2000 + F.expr("pmod(xxhash64(b, -1), 25)")).cast("int").alias("publish_year"),
+        )
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
 def replicated_events(spark: SparkSession, r: int) -> DataFrame:
     base = load_table(spark, "events", SF_DIR)
     reps = spark.range(r).select(F.col("id").alias("_rep"))
@@ -174,6 +215,29 @@ def build_slots(spark: SparkSession, r: int):
     # only) — must track corpus size, not shingle-frequency skew
     slots["containment_pairs"] = lambda: dedup.containment_pairs(
         toked, "doc_id", "toks", threshold=0.8, shingle_n=3
+    ).count()
+
+    # exact Jaccard joins: candidates come from an equi-join on set
+    # prefixes, so cost must track corpus size. D4 runs over 3-gram
+    # shingle arrays: every word of the 31-word synthetic vocabulary is
+    # in most docs, which defeats any prefix filter over word sets.
+    slots["ngram_pairs"] = lambda: dedup.near_dup_pairs_ngram(
+        docs, "doc_id", "text", n=3, threshold=0.5
+    ).count()
+    shingled = toked.withColumn("shingles", dedup.word_shingles(F.col("toks"), 3))
+    slots["d4_exact"] = lambda: dedup.dedup_similarity_exact(
+        shingled, "doc_id", "shingles", threshold=0.9
+    ).count()
+    # the production D4 shape: lower-cased title words at t = 0.9 with
+    # keep-newest, over a shared vocabulary whose stopwords are in most
+    # titles. A prefix taken in plain element order would put them in
+    # most prefixes and make the candidate join quadratic again.
+    titles = zipf_titles(spark, 5_000 * r).withColumn(
+        "toks", dedup.tokens(F.col("title"))
+    ).persist()
+    n_titles = titles.count()
+    slots["d4_titles"] = lambda: dedup.dedup_similarity_exact(
+        titles, "doc_id", "toks", threshold=0.9, prefer_desc_col="publish_year"
     ).count()
 
     # connected components over the engineered near-dup pair graph: the
@@ -774,6 +838,7 @@ def build_slots(spark: SparkSession, r: int):
 
     def cleanup() -> None:
         docs.unpersist()
+        titles.unpersist()
         ev.unpersist()
         emb.unpersist()
         pairs.rdd.unpersist()  # free the eager localCheckpoint blocks
@@ -783,7 +848,7 @@ def build_slots(spark: SparkSession, r: int):
         y4m_payloads.rdd.unpersist()
         dedup.release_caches()
 
-    meta = {"n_docs": n_docs, "n_events": n_events, "n_vecs": n_vecs}
+    meta = {"n_docs": n_docs, "n_titles": n_titles, "n_events": n_events, "n_vecs": n_vecs}
     return meta, slots, cleanup
 
 

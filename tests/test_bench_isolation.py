@@ -207,6 +207,22 @@ def test_persistent_stall_marks_record_contaminated(spark, monkeypatch, capsys):
     assert statistics.median(secs) / min(secs) > bench.STALL_RATIO
 
 
+def test_one_rep_record_says_the_stall_check_did_not_run(spark, monkeypatch, capsys):
+    """The stall check compares a slot's reps, so with one rep it cannot
+    fire: the record must say ``contaminated: null`` (not run), not a
+    clean ``false``."""
+    monkeypatch.setattr(bench, "REPS", 1)
+    reps = _recorded_reps(monkeypatch)
+
+    code, out, _ = _run(spark, monkeypatch, capsys, {"single": _good})
+
+    assert code is None
+    record = _record(out)
+    assert [len(secs) for secs in reps] == [1]
+    assert record["reps_per_slot"] == 1
+    assert record["contaminated"] is None
+
+
 def test_run_slot_no_extra_reps_when_spread_is_clean():
     """A clean slot must not pay for recovery reps it doesn't need."""
     calls = {"n": 0}

@@ -4,6 +4,9 @@ idempotence)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -90,8 +93,6 @@ def test_minhash_finds_exact_jaccard_pairs(spark):
     pairs = dedup.near_dup_pairs_minhash(df, "i", "toks", threshold=0.9, num_hashes=16, bands=8)
     got = [(r.id_a, r.id_b) for r in pairs.collect()]
     assert got == [(1, 2)]
-    survivors = dedup.dedup_minhash_lsh(df, "i", "toks", threshold=0.9)
-    assert sorted(r.i for r in survivors.collect()) == [1, 3]
 
 
 def test_simhash_hamming_zero_for_identical_and_blocks_lossless(spark):
@@ -776,3 +777,104 @@ def test_semdedup_auto_k_scaling_regime(spark, sf_dir):
     k = dedup.semdedup_auto_k(n, 100)
     assert all(0 <= r.cluster < k for r in got)
     dedup.release_caches()
+
+
+def _jaccard_cases(seed: int, n_cases: int = 40):
+    """Seeded small near-dup cases: per case a vocabulary of 3-40 words
+    and 2-10 rows, each a mutation of one base token list (repeated
+    tokens, empty rows, null and tied years). Tokens carry a per-case
+    prefix, so rows of different cases share no token and one frame
+    holds every case."""
+    rng = random.Random(seed)
+    rows = []
+    for case in range(n_cases):
+        vocab = [f"c{case}w{i}" for i in range(rng.randint(3, 40))]
+        base = [rng.choice(vocab) for _ in range(rng.randint(0, 12))]
+        for i in range(rng.randint(2, 10)):
+            toks = list(base)
+            for _ in range(rng.choice([0, 0, 1, 2, 4])):
+                op = rng.random()
+                if op < 0.4 and toks:
+                    toks[rng.randrange(len(toks))] = rng.choice(vocab)
+                elif op < 0.7:
+                    toks.insert(rng.randint(0, len(toks)), rng.choice(vocab))
+                elif toks:
+                    toks.pop(rng.randrange(len(toks)))
+            if rng.random() < 0.05:
+                toks = []
+            year = rng.choice([None, 2020, 2021, 2021, 2022])
+            rows.append((case * 100 + i, year, toks))
+    return rows
+
+
+def _jaccard(a: set, b: set) -> float:
+    return len(a & b) / len(a | b)
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_prefix_filtered_jaccard_matches_brute_force(spark, seed):
+    """The prefix-filtered candidate join must find every pair the
+    all-pairs definition finds: D4 survivors (keep-newest, null year
+    as 0, ties by id) and the n-gram pair list equal a pure-Python
+    brute force, for thresholds from 0.5 to 1.0."""
+    rows = _jaccard_cases(seed)
+    df = spark.createDataFrame(rows, "i long, year int, toks array<string>").withColumn(
+        "text", F.array_join("toks", " ")
+    )
+    sets = {i: set(toks) for i, _, toks in rows}
+    pref = {i: year or 0 for i, year, _ in rows}
+    bigrams = {
+        i: {f"{a} {b}" for a, b in zip(toks, toks[1:])} for i, _, toks in rows
+    }
+    for t in (0.5, 0.8, 0.9, 0.95, 1.0):
+        dropped = {
+            j
+            for i in sets
+            for j in sets
+            if (pref[i], -i) > (pref[j], -j)
+            and sets[i]
+            and sets[j]
+            and _jaccard(sets[i], sets[j]) >= t
+        }
+        out = dedup.dedup_similarity_exact(df, "i", "toks", threshold=t, prefer_desc_col="year")
+        assert sorted(r.i for r in out.collect()) == sorted(set(sets) - dropped), t
+
+        want = {
+            (i, j): round(_jaccard(bigrams[i], bigrams[j]), 6)
+            for i in bigrams
+            for j in bigrams
+            if i < j
+            and bigrams[i]
+            and bigrams[j]
+            and round(_jaccard(bigrams[i], bigrams[j]), 6) >= t
+        }
+        pairs = dedup.near_dup_pairs_ngram(df, "i", "text", n=2, threshold=t).collect()
+        got = {(r.id_a, r.id_b): r.jaccard for r in pairs}
+        assert len(pairs) == len(got), t  # one row per pair
+        assert got.keys() == want.keys(), t
+        assert all(abs(got[k] - want[k]) <= 1e-6 for k in want), t
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.1, 1.01, float("nan")])
+def test_jaccard_operators_reject_threshold_outside_unit_interval(spark, threshold):
+    """The prefix filter needs 0 < t <= 1: at t = 0 disjoint sets match
+    (Jaccard 0 >= 0) without sharing a prefix element, and t > 1 gives
+    a negative prefix length."""
+    df = spark.createDataFrame([(1, ["a"], "a b c")], "i long, toks array<string>, text string")
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.dedup_similarity_exact(df, "i", "toks", threshold=threshold)
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.near_dup_pairs_ngram(df, "i", "text", threshold=threshold)
+
+
+def test_prefix_join_keeps_common_words_out_of_the_prefix(spark):
+    """Words in every set ("a", "an", "and" sort first by spelling) must
+    not be prefix elements, or every pair of rows becomes a candidate:
+    200 rows that share only those words plus one copy of row 0 give
+    exactly one candidate pair, once although it shares two prefix
+    elements."""
+    rows = [(i, ["a", "an", "and"] + [f"u{i}_{k}" for k in range(7)]) for i in range(200)]
+    rows.append((200, rows[0][1]))
+    sets = spark.createDataFrame(rows, "id long, set array<string>")
+    pairs = dedup._prefix_pairs(sets, 0.9, F.col("_lid") < F.col("_rid")).collect()
+    assert [(r._lid, r._rid) for r in pairs] == [(0, 200)]

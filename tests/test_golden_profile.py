@@ -222,8 +222,8 @@ def test_ablation_corpus_retention_golden(spark):
     efficiency 73.1689…%; `analysis_summary.txt:7-8`). The engineered
     corpus packs the removals into the dedup stage (16,024 unique
     titles + 5,876 exact-title recrawls under fresh ids) and runs the
-    production D2→D3→D4 chain with the LSH similarity engine, passed
-    explicitly (``dedup_stage`` never picks it by row count)."""
+    production D2→D3→D4 chain, exact D4 included, at the full corpus
+    size."""
     base = spark.range(16024).select(
         F.lit("arxiv").alias("source"),
         F.format_string("25%05d", "id").alias("paper_id"),
@@ -239,7 +239,7 @@ def test_ablation_corpus_retention_golden(spark):
     )
     raw = base.unionByName(dups)
     assert raw.count() == 21900
-    final = P.dedup_stage(raw, similarity="lsh")
+    final = P.dedup_stage(raw)
     n_final = final.count()
     assert n_final == 16024
     assert raw.count() - n_final == 5876
